@@ -1,6 +1,6 @@
 """Compare two sets of benchmark run records, workload by workload.
 
-    python3 perfbench/compare.py SET_A --vs SET_B [--json]
+    python3 perfbench/compare.py SET_A --vs SET_B
 
 Each set is a directory of run records (``run.py`` writes them to
 ``.perfbench/results/``) or a list of record files. Untraced runs are
@@ -8,8 +8,8 @@ compared on every end-to-end metric of ``BENCHMARK.json``; for each
 set the table gives the run count, median, quartiles and spread
 (distance between the quartiles over the median), and then the change
 of B's median against A's. The sets agree on a metric when the median
-moved by no more than the metric's bound either way and each spread,
-``setup_s``'s excepted, is within the bound. Each set's host steal and
+moved by no more than the metric's bound either way and each set's
+spread is within the bound. Each set's host steal and
 CPU used outside the benchmark, summed over its runs, are printed
 beside it, so that a set made while the host was busy shows.
 
@@ -65,8 +65,7 @@ def compare_metric(a: list[float], b: list[float], spec: dict) -> dict:
     sa, sb = summarize(a), summarize(b)
     bound = spec["bound"]
     change = (sb.median - sa.median) / sa.median
-    worse = change if spec["better"] == "lower" else -change
-    spreads_ok = spec["name"] == "setup_s" or (sa.spread <= bound and sb.spread <= bound)
+    spreads_ok = sa.spread <= bound and sb.spread <= bound
     return {
         "metric": spec["name"],
         "unit": spec["unit"],
@@ -74,7 +73,6 @@ def compare_metric(a: list[float], b: list[float], spec: dict) -> dict:
         "a": sa.__dict__,
         "b": sb.__dict__,
         "change": change,
-        "b_not_worse": worse <= bound,
         "agree": abs(change) <= bound and spreads_ok,
     }
 
@@ -130,14 +128,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("set_a", nargs="+", help="directory or record files of set A")
     ap.add_argument("--vs", nargs="+", required=True, dest="set_b",
                     help="directory or record files of set B")
-    ap.add_argument("--json", action="store_true", help="print JSON instead")
     args = ap.parse_args(argv)
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     result = compare(load(args.set_a), load(args.set_b), bench)
-    if args.json:
-        print(json.dumps(result, indent=1))
-    else:
-        print_table(result)
+    print_table(result)
     agree = all(m["agree"] for res in result.values() for m in res["metrics"])
     return 0 if result and agree else 1
 

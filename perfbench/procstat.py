@@ -118,14 +118,14 @@ JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
 @dataclass(frozen=True)
 class TreeCpu:
     """CPU-seconds of the run's process tree at one moment, split into
-    the driver Python process, the driver JVM, the JVM's JIT compiler
-    threads and the pyspark daemon with its Python workers (everything
-    below the JVM)."""
+    the driver Python process, the driver JVM and the pyspark daemon
+    with its Python workers (everything below the JVM)."""
 
     driver_s: float
     jvm_s: float
-    """All threads of the JVM but the JIT compilers."""
+    """All threads of the JVM, the JIT compilers among them."""
     jit_s: float
+    """The JVM's JIT compiler threads alone."""
     workers_s: float
     workers: int
     """Live processes below the JVM, the daemon included."""
@@ -133,23 +133,21 @@ class TreeCpu:
     host_steal_s: float
 
     @property
-    def work_s(self) -> float:
-        """The tree's CPU less the JIT's: the work itself."""
+    def total_s(self) -> float:
         return self.driver_s + self.jvm_s + self.workers_s
 
     def minus(self, before: TreeCpu) -> dict[str, float]:
         """Use between two readings; ``workers`` is the later count."""
-        jit = self.jit_s - before.jit_s
-        work = self.work_s - before.work_s
+        total = self.total_s - before.total_s
         return {
-            "cpu_s": work,
+            "cpu_s": total,
             "driver_cpu_s": self.driver_s - before.driver_s,
             "jvm_cpu_s": self.jvm_s - before.jvm_s,
-            "jit_cpu_s": jit,
+            "jit_cpu_s": self.jit_s - before.jit_s,
             "workers_cpu_s": self.workers_s - before.workers_s,
             "workers": self.workers,
             "steal_s": self.host_steal_s - before.host_steal_s,
-            "other_cpu_s": self.host_busy_s - before.host_busy_s - work - jit,
+            "other_cpu_s": self.host_busy_s - before.host_busy_s - total,
         }
 
 
@@ -162,13 +160,13 @@ def split_tree(
 ) -> TreeCpu:
     """Split the CPU of ``driver``'s tree; ``jvm_threads`` are the
     JVM's threads (``/proc/<jvm>/task``). The driver's own count leaves
-    out its reaped children (set-up probes, the JVM of an earlier
-    session), which are not part of the run being measured."""
+    out its reaped children, which are not part of the run being
+    measured."""
     below = descendants(procs, jvm) - {jvm}
     jit = sum(t.own_ticks for t in jvm_threads if t.comm.startswith(JIT_THREADS))
     return TreeCpu(
         driver_s=procs[driver].own_ticks / TICK,
-        jvm_s=(procs[jvm].cpu_ticks - jit) / TICK,
+        jvm_s=procs[jvm].cpu_ticks / TICK,
         jit_s=jit / TICK,
         workers_s=sum(procs[p].cpu_ticks for p in below) / TICK,
         workers=len(below),

@@ -7,44 +7,42 @@ One client, this process, runs a workload's queries back to back on
 1. sets up a fresh SparkSession;
 2. makes a cold pass in the workload's order, whose action is
    ``collect()``: the outputs are hashed for the oracle check;
-3. makes ``WARMUP_PASSES`` untimed warm-up passes (action ``count()``,
-   like every later pass); the record shows whether pass CPU had
+3. makes the workload's untimed warm-up passes, whose action, like
+   that of every later pass, evaluates every output column and counts
+   the rows (``evaluate``); the record shows whether pass CPU had
    levelled off by the last of them (``stats.levelled_off``) and the
    trend across the timed passes (``stats.relative_slope``);
 4. makes timed passes until ``--seconds`` have elapsed and at least
    ``MIN_TIMED_PASSES`` were made;
-5. stops the session, starts ``SETUP_SAMPLES - 1`` set-up probes
-   (``probe.py``), each a fresh process, one after the other;
+5. stops the session;
 6. checks every collected output against its DuckDB oracle with the
-   row hash of ``tools/check_oracles.py``, and every ``count()``
-   against the oracle's row count.
+   row hash of ``tools/check_oracles.py``, and every row count against
+   the oracle's.
 
 The seed permutes the query order inside each warm pass and never
 changes the data, which is the seed-42 testdata, copied under
 ``perfbench/data``.
 
     for w in news iterative; do
-        python3 perfbench/run.py --workload $w --seed 1 --seconds 8 --trace 0
+        python3 perfbench/run.py --workload $w --seed 1 --seconds 6 --trace 0
     done
 
 The last line of standard output is one JSON object with the keys
 ``correct``, ``attempted``, ``failed`` and ``metrics``: the end-to-end
 metrics with ``--trace 0``, the per-layer metrics with ``--trace 1``.
-The run record (stamp, set-up samples, every pass and query execution
+The run record (stamp, set-up, every pass and query execution
 with its CPU, JVM and host readings, warm-up evidence, leaks, the
 check, and in traced runs the spans) goes to ``.perfbench/results/``;
 ``compare.py`` compares two sets of them.
 
 End-to-end metrics (``--trace 0``):
-  setup_s      process start to a ready SparkSession, the median of
-               this run's own set-up and its probes
+  setup_s      process start to a ready SparkSession
   pass_s       median wall time of the timed passes; the benchmark's
                cleanup between queries is not counted
   pass_cpu_s   median user+sys CPU-seconds of a timed pass, summed over
-               the process tree: driver Python, driver JVM, pyspark
-               daemon and workers; cleanup is not counted, nor are the
-               JVM's JIT compiler threads, which on this engine keep
-               compiling for tens of passes (jvm.jit_cpu_s)
+               the process tree: driver Python, driver JVM (its JIT
+               compiler threads included), pyspark daemon and workers;
+               cleanup is not counted
   peak_rss_mb  peak resident memory (VmHWM) of the driver JVM plus this
                Python process, read before the session stops; the JVM
                heap is fixed, so this moves with memory beyond it
@@ -64,10 +62,8 @@ import importlib.util
 import json
 import os
 import random
-import re
 import shutil
 import statistics
-import subprocess
 import sys
 import tempfile
 import time
@@ -80,7 +76,7 @@ ROOT = HERE.parent
 
 import procstat  # noqa: E402
 import stats  # noqa: E402
-from probe import (  # noqa: E402
+from sparksetup import (  # noqa: E402
     DRIVER_MEMORY, Setup, java_options, start_session, stop_session,
 )
 from sparkstats import QueryStats, SparkStats, read_jvm  # noqa: E402
@@ -93,6 +89,8 @@ from spans import (  # noqa: E402
 class Workload:
     sf: str
     queries: tuple[str, ...]
+    warmup_passes: int
+    """Untimed passes after the cold one."""
 
 
 # Two workloads, one per side of the engine's cost split: the data
@@ -101,30 +99,40 @@ class Workload:
 # one side should move one workload and leave the other alone. Each
 # layer the benchmark reports has a query on one of them.
 WORKLOADS = {
-    # The paper's DAG from crawl to similarity search: sources,
-    # functions (cleaning, tokens, sentiment), streaming state stores
-    # and the quality gate, similarity. Few jobs per query.
+    # The paper's DAG from crawl to similarity search, without its LDA
+    # fit: sources, functions (cleaning, tokens, sentiment), streaming
+    # state stores and the quality gate, similarity. A few Spark jobs
+    # per query, whose tasks and Python workers do the work.
     "news": Workload("sf0.01", (
         "s4_html_extract",
         "m6_m7_sentiment_scores",
         "streaming_quality_gate",
         "ann_topk_cosine",
-    )),
-    # A driver-loop operator on tiny data: near-duplicate clusters by
-    # MinHash LSH and connected components, whose iterations end in
-    # eager checkpoints. Plan building and tens of Spark jobs per query.
-    "iterative": Workload("sf0.001", ("dedup_cc_clusters",)),
+    ), warmup_passes=3),
+    # Driver-loop operators on tiny data, one per operator layer: the
+    # LDA fit and its UMass coherence, graph shortest paths over
+    # relational joins, naive Bayes k-fold evaluation over training-data
+    # folds, suffix-array n-gram counts, and near-duplicate clusters by
+    # MinHash LSH and connected components. Plan building and tens of
+    # Spark jobs per query. No warm-up pass: a pass takes 12-16 s and
+    # compiles 400-500 codegen classes, the run has room for the cold
+    # pass and two timed ones only.
+    "iterative": Workload("sf0.001", (
+        "m3_coherence_umass",
+        "shortest_paths_suppliers",
+        "nb_kfold_eval",
+        "kn_perplexity_buckets",
+        "dedup_cc_clusters",
+    ), warmup_passes=0),
 }
 
-# Pass CPU without the JIT's levels off three to four warm passes after
-# the cold one. The count is fixed rather than chosen by a plateau test
-# because the JIT keeps compiling for tens of passes at a falling rate:
-# a test passed on one run and failed on the next by noise, and runs
-# then timed different stages of that tail.
-WARMUP_PASSES = 4
-MIN_TIMED_PASSES = 4
-# This run's own set-up plus SETUP_SAMPLES - 1 probes.
-SETUP_SAMPLES = 3
+# Pass CPU falls steeply over the cold pass and the first warm pass;
+# after that the JIT keeps compiling for tens of passes at a slowly
+# falling rate (and on iterative, where each pass brings new codegen
+# classes, a steep one), which no run can wait out. The warm-up count
+# is fixed per workload, not chosen by a plateau test, so that every
+# run times the same stage of that tail.
+MIN_TIMED_PASSES = 2
 
 # Layers reported by the traced run, named after the package modules
 # (spans.layer_of): those the workloads' queries call. Spans of other
@@ -134,15 +142,17 @@ LAYERS = (
     "functions",
     "sources",
     "streaming",
+    "operators.topics",
+    "operators.coherence",
     "operators.similarity",
     "operators.textstats",
+    "operators.graph",
+    "operators.relational",
+    "operators.classify",
+    "operators.traindata",
+    "operators.suffixarray",
     "operators.dedup",
 )
-
-# Expression ids and lambda-variable suffixes come from counters that
-# run on across the session, so they differ between builds of one plan.
-_EXPR_ID = re.compile(r"#\d+L?")
-_LAMBDA_ID = re.compile(r"(lambda \w+)_\d+")
 
 
 @dataclass
@@ -221,6 +231,23 @@ def parse_args(argv: list[str] | None) -> argparse.Namespace:
     return ap.parse_args(argv)
 
 
+def evaluate(df) -> int:
+    """Compute every row and column of ``df``, as ``collect()`` would,
+    without bringing the rows to the driver, and return the row count.
+
+    ``count()`` would not do: the optimizer prunes every column the
+    count does not need, so a query that ends in a projection would
+    skip its expressions. A write to the ``noop`` sink keeps them all;
+    an observed metric counts the rows on the way."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    df.write.format("noop").mode("overwrite").save()
+    return obs.get["rows"]
+
+
 def digest(paths: list[Path]) -> str:
     h = hashlib.sha256()
     for p in sorted(paths):
@@ -245,13 +272,11 @@ class Bench:
         self.workload = WORKLOADS[args.workload]
         self.sf_dir = str(HERE / "data" / self.workload.sf)
         self.tmp = work / "tmp"
-        self.work = work
         self.tracer = LayerTracer() if args.trace else None
         self.passes: list[Pass] = []
         self.n_exec = 0
-        self.setups: list[Setup] = []
+        self.setup: Setup | None = None
         self.checks: dict[str, Check] = {}
-        self.fingerprints: dict[str, str] = {}
         self.spark = None
         self.t_wall0 = time.time()
         self.host_start = procstat.read_host()
@@ -259,8 +284,7 @@ class Bench:
     # -- set-up ---------------------------------------------------------
 
     def start(self) -> None:
-        self.spark, self.registry, setup = start_session()
-        self.setups.append(setup)
+        self.spark, self.registry, self.setup = start_session()
         self.oracles = load_check_oracles()
         self.sc = self.spark.sparkContext
         self.jvm_pid = self.spark._jvm.ProcessHandle.current().pid()
@@ -270,16 +294,6 @@ class Bench:
     def stop(self) -> None:
         stop_session(self.spark)
         self.spark = None
-
-    def probe_setups(self) -> None:
-        """Start set-up probes one after the other, each in a fresh
-        process with this run's environment, and wait for each."""
-        for _ in range(SETUP_SAMPLES - len(self.setups)):
-            out = subprocess.run(
-                [sys.executable, str(HERE / "probe.py")], cwd=ROOT,
-                stdout=subprocess.PIPE, text=True, check=True, timeout=120,
-            )
-            self.setups.append(Setup(**json.loads(out.stdout.splitlines()[-1])))
 
     # -- the loop -------------------------------------------------------
 
@@ -338,11 +352,11 @@ class Bench:
                     df = fn(self.spark, self.sf_dir)
                 t1 = time.perf_counter()
                 with self.tracer.query_span(ex.id, "query.action", "query.action"):
-                    ex.rows = df.count()
+                    ex.rows = evaluate(df)
             else:
                 df = fn(self.spark, self.sf_dir)
                 t1 = time.perf_counter()
-                ex.rows = self.collect_output(ex.query, df) if collect else df.count()
+                ex.rows = self.collect_output(ex.query, df) if collect else evaluate(df)
             t2 = time.perf_counter()
             ex.build_s, ex.action_s = t1 - t0, t2 - t1
         finally:
@@ -358,17 +372,6 @@ class Bench:
                 sp = innermost(own, submitted - self.tracer.epoch_offset)
                 if sp is not None:
                     sp.jobs.append(jid)
-            if ex.query not in self.fingerprints:
-                self.fingerprints[ex.query] = self.fingerprint(df)
-
-    def fingerprint(self, df) -> str:
-        """Hash of the optimized plan, without expression ids and with
-        this run's temp paths replaced."""
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        plan = _LAMBDA_ID.sub(r"\1", _EXPR_ID.sub("", plan))
-        plan = plan.replace(str(self.work), "<work>")
-        plan = re.sub(r"<work>/[^/\s,\]\)]+", "<work>/*", plan)
-        return hashlib.sha256(plan.encode()).hexdigest()[:16]
 
     def cleanup(self, ex: Execution) -> None:
         """Count what the query left behind, then release it: persisted
@@ -393,7 +396,7 @@ class Bench:
     def run(self) -> dict:
         self.start()
         self.run_pass("cold")
-        for _ in range(WARMUP_PASSES):
+        for _ in range(self.workload.warmup_passes):
             self.run_pass("warmup")
         t_start = time.perf_counter()
         timed: list[Pass] = []
@@ -413,8 +416,6 @@ class Bench:
                 timed.append(self.run_pass("timed"))
         peak_rss_mb = procstat.vm_hwm_mb(self.jvm_pid) + procstat.vm_hwm_mb("self")
         self.stop()
-        if not self.tracer:
-            self.probe_setups()
         self.check()
         return self.report(timed, traced, peak_rss_mb)
 
@@ -434,8 +435,8 @@ class Bench:
 
         co = self.oracles
         con = duckdb.connect()
-        for t in co.TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{self.sf_dir}/{t}.parquet'")
+        for path in sorted(Path(self.sf_dir).glob("*.parquet")):
+            con.sql(f"CREATE VIEW {path.stem} AS SELECT * FROM '{path}'")
         for name in self.workload.queries:
             c = self.checks.setdefault(name, Check(name, error="output not collected"))
             try:
@@ -468,7 +469,7 @@ class Bench:
             metrics = self.layer_metrics(traced, pass_s)
         else:
             metrics = {
-                "setup_s": (statistics.median(s.setup_s for s in self.setups), "s"),
+                "setup_s": (self.setup.setup_s, "s"),
                 "pass_s": (pass_s, "s"),
                 "pass_cpu_s": (statistics.median(p.cpu_s for p in timed), "s"),
                 "peak_rss_mb": (peak_rss_mb, "MB"),
@@ -551,7 +552,7 @@ class Bench:
         per_pass = [self.pass_layers(p) for p in traced]
         out = {k: statistics.median(pp[k] for pp in per_pass) for k in per_pass[0]}
         out["trace.overhead"] = out["trace.pass_s"] / pass_s
-        setup = self.setups[0]
+        setup = self.setup
         out["session.import_s"] = setup.import_s
         out["session.jvm_start_s"] = setup.jvm_start_s
         out["session.jit_s"] = setup.jit_s
@@ -609,7 +610,6 @@ class Bench:
             "python": sys.version.split()[0],
             "package_sha256": digest(pkg),
             "started": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime(self.t_wall0)),
-            **({"plan_fingerprints": self.fingerprints} if self.tracer else {}),
         }
 
     def record(self, result: dict) -> Path:
@@ -628,7 +628,7 @@ class Bench:
         rec = {
             "stamp": self.stamp(),
             "host": self.host_totals(),
-            "setups": [asdict(s) for s in self.setups],
+            "setup": asdict(self.setup),
             "warmup": self.warmup_evidence(),
             "leaks_by_query": leaks,
             "passes": [
@@ -662,7 +662,7 @@ def main(argv: list[str] | None = None) -> int:
     work = Path(tempfile.mkdtemp(prefix="run-", dir=ROOT / ".perfbench"))
     (work / "tmp").mkdir()
     (work / "spark").mkdir()
-    # Everything the run and its probes write stays in the checkout:
+    # Everything the run writes stays in the checkout:
     # the package's temp dirs go to a dir of this run's own, which
     # makes every entry in it a leak of the query that just ran.
     os.environ["TMPDIR"] = str(work / "tmp")

@@ -1,21 +1,13 @@
-"""Session set-up, shared by the benchmark run and its set-up probes.
-
-    python3 perfbench/probe.py
-
-runs one set-up probe: a fresh process imports the package, starts a
-session exactly as a benchmark run does, prints its set-up times as
-one JSON line, stops the session and exits. ``run.py`` starts the
-probes with the environment it set for itself, so that every sample
-of ``setup_s`` sets up the same thing.
-"""
+"""Session set-up for a benchmark run: a SparkSession started exactly
+as the package's ``session.py`` starts it, with the driver JVM options
+the benchmark fixes, and how long set-up took."""
 
 from __future__ import annotations
 
-import json
 import os
 import subprocess
 import time
-from dataclasses import asdict, dataclass
+from dataclasses import dataclass
 
 from procstat import since_process_start
 from sparkstats import read_jvm
@@ -86,16 +78,3 @@ def stop_session(spark) -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
-
-
-def main() -> int:
-    spark, _, setup = start_session()
-    try:
-        print(json.dumps(asdict(setup)), flush=True)
-    finally:
-        stop_session(spark)
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

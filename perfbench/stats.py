@@ -13,15 +13,16 @@ import statistics
 PLATEAU_TOLERANCE = 0.05
 
 
-def levelled_off(cpu_s: list[float], tolerance: float = PLATEAU_TOLERANCE) -> bool:
+def levelled_off(cpu_s: list[float]) -> bool:
     """Whether the last of the warm passes so far is past warm-up: it
-    cost no less CPU than the pass before it, less ``tolerance``.
+    cost no less CPU than the pass before it, less
+    ``PLATEAU_TOLERANCE``.
 
     The first warm pass never qualifies, because the cold pass before
     it ran another action and is not comparable."""
     if len(cpu_s) < 2:
         return False
-    return cpu_s[-1] >= cpu_s[-2] * (1 - tolerance)
+    return cpu_s[-1] >= cpu_s[-2] * (1 - PLATEAU_TOLERANCE)
 
 
 def relative_slope(values: list[float]) -> float:
