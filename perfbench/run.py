@@ -533,6 +533,8 @@ class Bench:
             "spark.input_mb": sum(s.input_mb for s in qs),
             "jvm.jit_s": summary["jit_s"],
             "jvm.jit_cpu_s": summary["jit_cpu_s"],
+            "jvm.gc_s": summary["gc_s"],
+            "spark.gc_s": sum(s.gc_s for s in qs),
             "codegen.compiles": summary["codegen_compiles"],
             "proc.driver_cpu_s": summary["driver_cpu_s"],
             "proc.jvm_cpu_s": summary["jvm_cpu_s"],
